@@ -938,7 +938,9 @@ def editdist1_pairs(
             F.sequence(F.lit(1), F.length(s)),
             lambda i: F.concat(
                 F.substring(s, F.lit(1), i - 1),
-                F.substring(s, i + 1, F.length(s)),
+                # no length argument: the rest of the string, without
+                # re-measuring ``s`` once per deleted position
+                F.substr(s, i + 1),
             ),
         ),
     )

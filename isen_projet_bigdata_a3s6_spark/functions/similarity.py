@@ -626,20 +626,31 @@ def quantize_int8(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     clamped to [-127, 127]; zero vectors quantize to zeros with scale 0.
 
     Returns ``(id, scale, qvec)`` with scale round6'd (float path). Pure
-    higher-order array expressions (aggregate/transform) — fully codegen'd,
-    no shuffle at all: the operator is embarrassingly row-parallel, which
-    is exactly what you want applied to 10^11 vectors.
+    higher-order array expressions (aggregate/transform), no shuffle at all:
+    the operator is embarrassingly row-parallel, which is exactly what you
+    want applied to 10^11 vectors. The higher-order functions are NOT
+    codegen'd — Spark runs them interpreted (CodegenFallback), evaluating a
+    lambda body once per component — so the per-vector ``scale`` is bound
+    once as a lambda variable (the ``transform(array(x), x -> …)`` idiom in
+    ml/kmeans.py:245) instead of re-deriving ``max(|v|)`` inside the
+    per-component lambda: O(dim) per vector, not O(dim²).
     """
     v = F.col(vec_col)
     absmax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = (absmax / F.lit(127.0)).cast("double")
-    q = F.when(absmax > 0, F.transform(
-        v,
-        lambda x: F.greatest(
-            F.lit(-127),
-            F.least(F.lit(127), F.round(x / scale).cast("int")),
-        ),
-    )).otherwise(F.transform(v, lambda x: F.lit(0)))
+
+    def clamp_all(s: Column) -> Column:
+        return F.transform(
+            v,
+            lambda x: F.greatest(
+                F.lit(-127),
+                F.least(F.lit(127), F.round(x / s).cast("int")),
+            ),
+        )
+
+    q = F.when(
+        absmax > 0, F.element_at(F.transform(F.array(scale), clamp_all), 1)
+    ).otherwise(F.transform(v, lambda x: F.lit(0)))
     return df.select(
         F.col(id_col),
         F.round(scale, 6).alias("scale"),

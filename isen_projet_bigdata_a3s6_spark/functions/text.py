@@ -2,9 +2,13 @@
 (BASELINE.json north_star): tokenization, token counting, language ID,
 quality scoring, document fingerprinting.
 
-Everything here is pure builtin column expressions (JVM-side, inside
-whole-stage codegen) — no Python in the hot path, so these scale as plain
-map operations over 100 TB of documents.
+Everything here is pure builtin column expressions (JVM-side; the
+higher-order array functions run interpreted inside the codegen'd stage)
+— no Python in the hot path, so these scale as plain map operations over
+100 TB of documents. A lambda body is evaluated once per array element,
+so it must read only lambda variables, attributes and literals: a
+per-row input is bound once (ml/kmeans.py:245), never recomputed inside
+the lambda.
 """
 
 from __future__ import annotations
@@ -117,48 +121,71 @@ def fingerprint(col: str | Column) -> Column:
 def word_ngrams(col: str | Column, n: int = 5) -> Column:
     """Array of word n-grams (space-joined) of the lowercased token stream —
     the contamination / dedup unit for token-level overlap checks. Empty
-    array when the document has fewer than ``n`` tokens."""
-    toks = tokens(col)
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i, n), " ")
-    )
+    array when the document has fewer than ``n`` tokens (NULL text too).
+
+    O(len) per row: the token array is bound once per row as a lambda
+    variable (the ``transform(array(x), x -> …)`` idiom of the PQ argmin in
+    ml/kmeans.py:245). Catalyst evaluates a lambda body once per array
+    element, so a body that named ``tokens(col)`` would re-split the whole
+    text for every n-gram."""
+
+    def grams(t: Column) -> Column:
+        # sequence(1, 0) would generate a DESCENDING [1, 0] — guard short docs
+        idx = F.when(
+            F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))
+        ).otherwise(F.expr("array()").cast("array<int>"))
+        return F.transform(idx, lambda i: F.array_join(F.slice(t, i, n), " "))
+
+    return F.element_at(F.transform(F.array(tokens(col)), grams), 1)
 
 
 def char_ngrams(col: str | Column, n: int = 5) -> Column:
     """Array of character n-grams (shingles) of the normalized text —
-    the input to MinHash/Jaccard dedup."""
+    the input to MinHash/Jaccard dedup. Empty array for NULL text and for
+    text shorter than ``n`` after normalization.
+
+    O(len) per row: ``array_repeat`` hands the normalized text to the
+    lambda as its element, so the lambda reads only its own variables (the
+    same bind-once purpose as the ``transform(array(x), x -> …)`` idiom in
+    ml/kmeans.py:245). Catalyst evaluates a lambda body once per array
+    element; a body that named the normalization expression re-ran
+    ``regexp_replace`` over the whole text for every shingle — O(len²)."""
     c = F.col(col) if isinstance(col, str) else col
     norm = F.regexp_replace(F.lower(F.trim(c)), "\\s+", " ")
-    # sequence(1, 0) would generate a DESCENDING [1, 0] — guard short strings
-    idx = F.when(
-        F.length(norm) >= n, F.sequence(F.lit(1), F.length(norm) - (n - 1))
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    return F.transform(idx, lambda i: F.substring(norm, i, F.lit(n)))
+    # greatest(…, 0): no shingles (not a negative count) for short text;
+    # greatest skips the NULL length of NULL text, which repeats 0 times
+    reps = F.array_repeat(norm, F.greatest(F.length(norm) - (n - 1), F.lit(0)))
+    return F.transform(reps, lambda s, i: F.substring(s, i + 1, n))
 
 
 def chunks(col: str | Column, size: int = 50, stride: int = 40) -> Column:
     """Array of overlapping word chunks — the document→training-sample
     splitter. Chunk ``i`` covers tokens ``[i·stride, i·stride + size)``;
     starts advance by ``stride`` while they fall inside the document, so
-    consecutive chunks overlap by ``size − stride`` tokens. Pure builtin
-    expressions (sequence → transform → slice → array_join): chunking 100 TB
-    of text is a codegen'd map with zero Python."""
+    consecutive chunks overlap by ``size − stride`` tokens. Empty array for
+    NULL or blank text. Pure builtin expressions (sequence → transform →
+    slice → array_join), zero Python; the higher-order functions run
+    interpreted (CodegenFallback) inside the codegen'd stage.
+
+    O(len) per row: the token array is bound once per row as a lambda
+    variable (the ``transform(array(x), x -> …)`` idiom in
+    ml/kmeans.py:245), so the text is tokenized once, not once per chunk."""
     if stride <= 0 or size <= 0:
         raise ValueError("chunks: size and stride must be positive")
-    toks = tokens(col)
-    n_chunk = F.when(
-        F.size(toks) > 0,
-        F.ceil(F.size(toks) / F.lit(stride)).cast("int"),
-    ).otherwise(F.lit(0))
-    idx = F.when(n_chunk > 0, F.sequence(F.lit(0), n_chunk - 1)).otherwise(
-        F.expr("array()").cast("array<int>")
-    )
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i * stride + 1, size), " ")
-    )
+
+    def split(t: Column) -> Column:
+        n_chunk = F.when(
+            F.size(t) > 0,
+            F.ceil(F.size(t) / F.lit(stride)).cast("int"),
+        ).otherwise(F.lit(0))
+        idx = F.when(n_chunk > 0, F.sequence(F.lit(0), n_chunk - 1)).otherwise(
+            F.expr("array()").cast("array<int>")
+        )
+        return F.transform(
+            idx, lambda i: F.array_join(F.slice(t, i * stride + 1, size), " ")
+        )
+
+    return F.element_at(F.transform(F.array(tokens(col)), split), 1)
 
 
 # public PII surface patterns (regex-compatible across Java and RE2):

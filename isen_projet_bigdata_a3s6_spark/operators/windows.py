@@ -199,9 +199,14 @@ def global_midranks(
       WINDOW could never split).
     - ``"auto"`` — one exact tie probe (groupBy count + max, column-
       pruned, skew-safe via partial agg) picks: wide when the largest
-      tie group exceeds ~2 ideal partitions (``max_cnt·nparts > 2·n``).
-      The probe is an extra pass over the value column — callers on a
-      hot path with a known column should pass the contract explicitly.
+      tie group exceeds ~2 ideal partitions (``max_cnt·nparts > 2·n``),
+      where ``nparts`` is ``spark.sql.shuffle.partitions`` — the count the
+      narrow path's ``repartitionByRange`` actually uses. The probe is
+      EAGER: it runs a Spark job (``collect()``) when this function is
+      called, i.e. while the DataFrame is being built, not when the
+      result executes, and it recomputes an unpersisted ``df`` once more
+      for the chosen path. Callers on a hot path with a known column, or
+      that must stay lazy, should pass the contract explicitly.
 
     Both paths produce identical ranks (same ±0.0/NaN/NULL semantics —
     the ``__key`` normalization happens before either; pinned in
@@ -216,7 +221,7 @@ def global_midranks(
     keyed = df.withColumn("__key", key)
     bcast = False
     if ties == "auto":
-        nparts = df.sparkSession.sparkContext.defaultParallelism
+        nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         probe = (
             keyed.groupBy("__key")
             .agg(F.count(F.lit(1)).alias("__c"))

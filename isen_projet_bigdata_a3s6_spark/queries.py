@@ -7470,10 +7470,20 @@ def q193_quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    # bind ``scale`` once per row as a lambda variable (ml/kmeans.py:245):
+    # CollapseProject inlines quantize_int8's scale expression, a pass over
+    # the whole vector, wherever the column is named, so naming it inside
+    # the per-component lambda would redo that pass for every component
     deq = quantize_int8(emb, "embedding", "vec_id").select(
         "vec_id",
-        F.transform(
-            "qvec", lambda x: (x.cast("double") * F.col("scale")).cast("float")
+        F.element_at(
+            F.transform(
+                F.array("scale"),
+                lambda s: F.transform(
+                    "qvec", lambda x: (x.cast("double") * s).cast("float")
+                ),
+            ),
+            1,
         ).alias("embedding"),
     )
     exact = cosine_topk(emb, q, k=10, query_id="query_id").select(

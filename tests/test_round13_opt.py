@@ -10,7 +10,8 @@ these tests pin the equivalence arguments at the operator level:
   exact-threshold boundary corpora from rounds 7/8;
 - global_midranks' wide (distinct-table) tie fallback against the in-place
   narrow path, including the 90%-one-value degenerate-skew corpus and the
-  ±0.0 / NaN / NULL edge values;
+  ±0.0 / NaN / NULL edge values, and the auto probe's partition count
+  (spark.sql.shuffle.partitions, what the range exchange uses);
 - dedup_keep_first's float-key canonicalization (SPARK-32110), per ADVICE
   r12: groupBy canonicalizes float grouping keys in the OUTPUT (−0.0 →
   0.0, NaN bit patterns to one canonical NaN) where the old window path
@@ -249,6 +250,31 @@ def test_global_midranks_degenerate_skew_bounded(spark):
         .collect()
     ]
     assert max(sizes) < int(0.9 * n), sizes
+
+
+def test_global_midranks_auto_sizes_by_shuffle_partitions(spark):
+    """The auto heuristic's ``nparts`` is spark.sql.shuffle.partitions —
+    the partition count of the narrow path's range exchange — not
+    defaultParallelism. 1000 rows with a 10-row tie group: one range
+    partition of 400 holds ~2.5 rows, so the tie group spans ~4 ideal
+    partitions and auto must pick the wide path; under
+    defaultParallelism (≤ 200 cores) it stayed narrow."""
+    from isen_projet_bigdata_a3s6_spark.operators.windows import (
+        global_midranks,
+    )
+
+    rows = [(i, 5.0 if i < 10 else float(i)) for i in range(1000)]
+    df = spark.createDataFrame(rows, "rid int, v double")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "400")
+    try:
+        out_auto = global_midranks(df, "v", "w", ties="auto")
+        assert "__mkey" in out_auto._jdf.queryExecution().analyzed().toString()
+        a = {(r["rid"], r["w"]) for r in out_auto.collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    b = {(r["rid"], r["w"]) for r in global_midranks(df, "v", "w", ties="narrow").collect()}
+    assert a == b
 
 
 # ---------------------------------------------------------------------------
